@@ -9,9 +9,13 @@ Iceberg jars, which aren't in this image):
                               them re-compressed would hide the ratio)
   <root>/manifest/            chunk rows sans payload (lineage + metrics:
                               codec, dict size, ratio, row counts, min/max)
-  <root>/salt_plan/           recorded skew plan (group -> bytes, n_salts):
-                              resume/append re-encodes reuse it instead of
-                              re-scanning the input for the size histogram
+  <root>/salt_plan/           recorded skew plan (group -> bytes, n_salts),
+                              one file per write: resume/append re-encodes
+                              reuse it instead of re-scanning the input for
+                              the size histogram
+  <root>/file_map/            chunk->file sidecar (ensure_file_map). Writers
+                              only invalidate it; scan(colocated=True) is
+                              its only builder, on first use after a write
 
 The manifest is written AFTER the chunks, so its presence commits them —
 the analog of parquet4s's postWriteHandler checkpoint semantics
@@ -34,6 +38,7 @@ from .decoder import decode_table
 from .encoder import (
     ENCODED_DDL,
     MANIFEST_COLS,
+    _salted_partitions,
     encode_table,
     group_key_expr,
     payload_ck,
@@ -64,7 +69,6 @@ def write_encoded(
     df: DataFrame,
     path: str,
     mode: str = "error",
-    file_map: bool = True,
     **encode_kwargs,
 ) -> None:
     """Encode ``df`` and persist chunks + manifest at ``path``.
@@ -73,12 +77,13 @@ def write_encoded(
     /root/reference/core/src/main/scala/com/github/mjakubowski84/parquet4s/IOOps.scala:37-56),
     'overwrite', or 'append'.
 
-    ``file_map=False`` skips the chunk->file sidecar build (a Spark job
-    reading every new part file's chunk_id column). Streaming epoch
-    sub-datasets pass False: per-epoch sidecars have NO reader —
-    root-level scans need a root map, and compaction deletes epoch
-    dirs and rebuilds the map anyway — so building one per micro-batch
-    was pure per-epoch latency.
+    A grouped, salted write with no caller-given ``salt_plan`` runs
+    four Spark jobs: the salt-plan total, the plan sidecar, the chunks
+    and the manifest. It does NOT build the chunk->file sidecar
+    (ensure_file_map): that map's only reader is
+    ``scan(colocated=True)``, which builds it on demand. An overwrite
+    deletes the old map (its rows name replaced files); an append
+    leaves it stale, which the marker fingerprint detects.
     """
     if mode not in ("error", "overwrite", "append"):
         # an unrecognized mode must fail loudly: it would otherwise
@@ -106,13 +111,19 @@ def write_encoded(
         plan is None and bool(group_cols) and encode_kwargs.get("salted", True)
     )
     if own_plan:
-        plan, _total = plan_salts(
+        plan, total = plan_salts(
             df,
             group_cols,
             encode_kwargs.get("target_group_bytes", 16 << 20),
             with_total=True,
         )
         encode_kwargs["salt_plan"] = plan
+        if encode_kwargs.get("num_partitions") is None:
+            # size partitions from the total plan_salts just collected,
+            # so encode_prepare skips a second sum over the plan
+            encode_kwargs["num_partitions"] = _salted_partitions(
+                total, df.sparkSession.sparkContext.defaultParallelism
+            )
     encoded = None
     try:
         # encode_table sits inside the try: if it raises (unknown bloom
@@ -125,8 +136,12 @@ def write_encoded(
             # the plan sidecar lands BEFORE the chunks: a write that
             # crashes mid-chunk-job leaves the recorded plan behind, so
             # the resume re-encode skips the histogram pass and
-            # reproduces the originally planned chunking exactly
-            plan.write.mode(write_mode).parquet(fsio.join(path, SALT_PLAN_DIR))
+            # reproduces the originally planned chunking exactly. One
+            # file per write: the plan is one row per group, and
+            # shuffle-partition-many files would only add listing cost
+            plan.coalesce(1).write.mode(write_mode).parquet(
+                fsio.join(path, SALT_PLAN_DIR)
+            )
         (
             encoded.write.mode(write_mode)
             .option("compression", "uncompressed")
@@ -138,14 +153,11 @@ def write_encoded(
         # write cost stays proportional to the increment at 100 TB
         manifest = encoded.select(*MANIFEST_COLS)
         manifest.write.mode(write_mode).parquet(manifest_path)
-        # chunk->file sidecar AFTER the commit (incremental: maps only
-        # the files this write added; overwrite invalidates the old map
-        # first — its rows reference replaced files). A crash before
-        # this point just leaves the marker stale and scans fall back.
+        # an overwrite invalidates the chunk->file sidecar (its rows
+        # reference replaced files); an append leaves it stale, and the
+        # next colocated scan maps only the new files
         if write_mode == "overwrite":
             fsio.rmtree(fsio.join(path, FILE_MAP_DIR))
-        if file_map:
-            ensure_file_map(df.sparkSession, path)
     finally:
         if encoded is not None:
             encoded.unpersist()
@@ -258,9 +270,20 @@ _FILE_MAP_MARKER = "_complete.json"
 _FILE_MAP_DDL = "file string, chunk_id string"
 
 
-def ensure_file_map(spark: SparkSession, path: str) -> int:
+def ensure_file_map(
+    spark: SparkSession,
+    path: str,
+    files: "list[tuple[str, str, int]] | None" = None,
+) -> int:
     """Bring the chunk->file sidecar up to date; returns the number of
-    newly mapped part files.
+    newly mapped part files. ``files`` is the caller's
+    _committed_part_files listing, reused instead of listing again.
+
+    Writers never call this: they only invalidate the map (overwrite
+    deletes it, append leaves the marker stale). ``scan(colocated=True)``
+    calls it whenever its listing does not match the marker, so the
+    build cost lands on the first colocated scan after a write — the
+    one caller that benefits from the map.
 
     The sidecar is one row per (part file, chunk_id) — built by reading
     ONLY each new file's chunk_id column (a metadata-scale columnar
@@ -272,9 +295,10 @@ def ensure_file_map(spark: SparkSession, path: str) -> int:
     the existing map — append cost is proportional to new files, the
     same property the manifest append has); the _complete.json marker
     stores a fingerprint of the COMMITTED file set, and readers use
-    the map only when their own listing matches it, so a missing or
-    stale sidecar degrades to the default scan, never to wrong rows.
-    Same fall-back discipline as the salt_plan sidecar (r5)."""
+    the map only when their own listing matches it, so a sidecar that
+    is missing, stale or cannot be refreshed (e.g. a read-only store)
+    degrades to the default scan, never to wrong rows. Same fall-back
+    discipline as the salt_plan sidecar (r5)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -284,7 +308,8 @@ def ensure_file_map(spark: SparkSession, path: str) -> int:
         # file-pruned scan that consumes the map — no-op, scans fall
         # back to the default plan (no marker is ever written)
         return 0
-    files = _committed_part_files(path)
+    if files is None:
+        files = _committed_part_files(path)
     fm_dir = fsio.join(path, FILE_MAP_DIR)
     fdf = spark.createDataFrame(
         [(r, f) for r, f, _ in files] or [("", "")],
@@ -565,10 +590,9 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
         for e in epochs:
             fsio.rmtree(e)
         if epochs:
-            # a crash before the map rebuild left the epoch-based map
-            # behind; refresh it against the base layout
+            # a crash before the map removal left the epoch-based map
+            # behind; the next colocated scan rebuilds it
             fsio.rmtree(fsio.join(path, FILE_MAP_DIR))
-            ensure_file_map(spark, path)
         return 0
     if not epochs:
         return 0
@@ -603,10 +627,9 @@ def compact_epochs(spark: SparkSession, path: str) -> int:
     manifest.write.mode("overwrite").parquet(fsio.join(path, MANIFEST_DIR))
     for e in epochs:
         fsio.rmtree(e)
-    # the old map rows reference epoch files that no longer exist —
-    # rebuild against the fresh base layout
+    # the old map rows reference epoch files that no longer exist; the
+    # next colocated scan maps the fresh base layout
     fsio.rmtree(fsio.join(path, FILE_MAP_DIR))
-    ensure_file_map(spark, path)
     return len(epochs)
 
 

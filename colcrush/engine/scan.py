@@ -17,8 +17,10 @@ from __future__ import annotations
 
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import fsio
 from .dataset import read_chunks, read_manifest, read_schema
 from .decoder import decode_table
 from .encoder import _STAT_TRUNC
@@ -354,13 +356,21 @@ def scan(
     files instead of scanning every file's chunk rows. Correct by
     construction regardless of which extra chunks share those files:
     the residual predicate re-applies on decoded rows, the same
-    guarantee bloom false positives already rely on. Falls back to the
-    default plan whenever the sidecar is missing/stale (fingerprint
-    mismatch), the surviving-file set exceeds ``max_pruned_files``
-    (bounding the driver-side file list), or there are no filters.
+    guarantee bloom false positives already rely on.
+
+    This scan is the sidecar's only builder: writes leave it missing
+    or stale, and when the marker does not match the committed
+    part-file listing the scan first maps the unmapped files (one
+    Spark job reading their chunk_id columns), so the first colocated
+    scan after a write pays that cost. Falls back to the default plan
+    when that refresh fails (OSError, or a failed Spark write job —
+    e.g. a read-only store), the surviving-file set exceeds
+    ``max_pruned_files`` (bounding the driver-side file list), the
+    path is not pyarrow-openable, or there are no filters.
     """
     from .dataset import (
         _committed_part_files,
+        ensure_file_map,
         file_map_matches,
         fused_decode,
         read_file_map,
@@ -383,9 +393,19 @@ def scan(
         alive_ids = _alive_chunk_ids(manifest, filters, wb)
 
     decoded = None
-    if colocated and alive_ids is not None:
+    if colocated and alive_ids is not None and fsio.pyarrow_openable(path):
         parts = _committed_part_files(path)
-        if file_map_matches(path, [r for r, _, _ in parts]):
+        mapped = file_map_matches(path, [r for r, _, _ in parts])
+        if not mapped:
+            try:
+                ensure_file_map(spark, path, parts)
+                mapped = True
+            except (OSError, Py4JJavaError):
+                # the sidecar cannot be written (e.g. a read-only
+                # store; a failed Spark write job surfaces as
+                # Py4JJavaError): the default plan is always correct
+                pass
+        if mapped:
             surviving = (
                 read_file_map(spark, path)
                 .join(alive_ids, on="chunk_id", how="left_semi")

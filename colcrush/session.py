@@ -12,6 +12,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def shuffle_compress(value: str, ram_backed: bool) -> bool:
+    """Parse COLCRUSH_SHUFFLE_COMPRESS: ``auto`` (compress unless the
+    local dir is RAM-backed), ``1/true/yes`` or ``0/false/no``,
+    case-insensitive. Any other value raises instead of silently
+    turning compression off."""
+    v = value.strip().lower()
+    if v == "auto":
+        return not ram_backed
+    if v in ("1", "true", "yes"):
+        return True
+    if v in ("0", "false", "no"):
+        return False
+    raise ValueError(
+        f"COLCRUSH_SHUFFLE_COMPRESS must be auto, 1/true/yes or "
+        f"0/false/no, got {value!r}"
+    )
+
+
 def get_spark(
     app: str = "colcrush",
     cores: int | None = None,
@@ -44,19 +62,21 @@ def get_spark(
         shuffle_dir = "/dev/shm/colcrush-spark-local"
         os.makedirs(shuffle_dir, exist_ok=True)
         b = b.config("spark.local.dir", shuffle_dir)
-    # Shuffle compression is parameterised (COLCRUSH_SHUFFLE_COMPRESS=
-    # 1/0/auto): compressing blocks headed to a RAM-backed local dir is
-    # pure CPU — no disk or network exists for the smaller bytes to
-    # help — so "auto" (default) turns it off exactly when the
-    # RAM-backed dir above is in use. A cluster deployment configures
-    # executors via spark-submit, not this local-mode factory, and
-    # keeps Spark's default (on): there shuffle bytes cross real disks
-    # and NICs, where compression earns its CPU. On hosts with a SMALL
-    # /dev/shm (e.g. a container's default 64 MB) uncompressed shuffle
-    # files fill the tmpfs sooner — set COLCRUSH_SHUFFLE_COMPRESS=1 (or
-    # point spark.local.dir elsewhere) as the escape hatch.
-    comp_env = os.environ.get("COLCRUSH_SHUFFLE_COMPRESS", "auto")
-    comp_on = (not shm) if comp_env == "auto" else comp_env == "1"
+    # Shuffle compression is parameterised (COLCRUSH_SHUFFLE_COMPRESS,
+    # parsed by shuffle_compress): compressing blocks headed to a
+    # RAM-backed local dir is pure CPU — no disk or network exists for
+    # the smaller bytes to help — so "auto" (default) turns it off
+    # exactly when the RAM-backed dir above is in use. A cluster
+    # deployment configures executors via spark-submit, not this
+    # local-mode factory, and keeps Spark's default (on): there shuffle
+    # bytes cross real disks and NICs, where compression earns its
+    # CPU. On hosts with a SMALL /dev/shm (e.g. a container's default
+    # 64 MB) uncompressed shuffle files fill the tmpfs sooner — set
+    # COLCRUSH_SHUFFLE_COMPRESS=1 (or point spark.local.dir elsewhere)
+    # as the escape hatch.
+    comp_on = shuffle_compress(
+        os.environ.get("COLCRUSH_SHUFFLE_COMPRESS", "auto"), shm
+    )
     b = b.config("spark.shuffle.compress", str(comp_on).lower()).config(
         "spark.shuffle.spill.compress", str(comp_on).lower()
     )

@@ -12,6 +12,7 @@ that compaction preserves the whole-chunks-per-file precondition.
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -162,12 +163,11 @@ def test_colocated_across_epochs_and_compaction(spark, tmp_path):
     assert len(before) == 300
     assert compact_epochs(spark, ds) == 2
     assert _rows(read_decoded(spark, ds, colocated=True)) == before
-    # compaction rebuilt the chunk->file sidecar against the base
-    # layout, so the file-pruned scan works on the compacted dataset
+    # compaction drops the epoch-based chunk->file sidecar; the first
+    # file-pruned scan maps the compacted base layout
     from colcrush.engine import scan
     from colcrush.engine.dataset import _committed_part_files, file_map_matches
 
-    assert file_map_matches(ds, [r for r, _, _ in _committed_part_files(ds)])
     got = scan(
         spark, ds, columns=["path"], filters=[("lang", "==", "py")],
         colocated=True,
@@ -175,42 +175,88 @@ def test_colocated_across_epochs_and_compaction(spark, tmp_path):
     assert _rows(got) == _rows(
         scan(spark, ds, columns=["path"], filters=[("lang", "==", "py")])
     )
+    assert file_map_matches(ds, [r for r, _, _ in _committed_part_files(ds)])
 
 
-def test_file_map_sidecar_lifecycle(spark, tmp_path):
-    """write_encoded maintains the chunk->file sidecar incrementally;
-    ensure_file_map is idempotent and the completeness marker tracks
-    the committed part-file set."""
-    from colcrush.engine import ensure_file_map
+def test_file_map_sidecar_lifecycle(spark, tmp_path, monkeypatch):
+    """Writes never build the chunk->file sidecar; the colocated scan
+    is its only builder. The first colocated scan after a write maps
+    every unmapped part file, ensure_file_map is then a no-op, an
+    append leaves the map stale until the next colocated scan maps
+    only the new files, and rows always equal the default plan. The
+    dataset reads without a map, and an on-demand build covers every
+    part file."""
+    import colcrush.engine.dataset as ds_mod
+    from colcrush.engine import ensure_file_map, scan
     from colcrush.engine.dataset import (
+        FILE_MAP_DIR,
         _committed_part_files,
         file_map_matches,
         read_file_map,
     )
+
+    built = []  # files each scan-triggered refresh mapped
+
+    def spy(*a, **k):
+        built.append(ensure_file_map(*a, **k))
+        return built[-1]
+
+    monkeypatch.setattr(ds_mod, "ensure_file_map", spy)
+
+    def rels():
+        return [r for r, _, _ in _committed_part_files(ds)]
+
+    def mapped_files():
+        return {
+            r["file"]
+            for r in read_file_map(spark, ds).select("file").distinct().collect()
+        }
+
+    def check_scan():
+        filters = [("lang", "==", "python")]
+        got = _rows(scan(spark, ds, columns=["path"], filters=filters, colocated=True))
+        assert got == _rows(scan(spark, ds, columns=["path"], filters=filters))
+        assert got
 
     ds = str(tmp_path / "ds")
     write_encoded(
         source_code_df(spark, 300, n_repos=5), ds,
         mode="overwrite", group_cols=["lang"],
     )
-    parts = _committed_part_files(ds)
-    assert file_map_matches(ds, [r for r, _, _ in parts])
+    assert not os.path.exists(os.path.join(ds, FILE_MAP_DIR))
+    assert read_decoded(spark, ds).count() == 300
+    check_scan()
+    parts = rels()
+    assert built == [len(parts)]
+    assert file_map_matches(ds, parts)
+    assert mapped_files() == set(parts)
     assert ensure_file_map(spark, ds) == 0  # idempotent no-op
-    # every part file is mapped, and every manifest chunk id appears
-    mapped_files = {
-        r["file"] for r in read_file_map(spark, ds).select("file").distinct().collect()
-    }
-    assert mapped_files == {r for r, _, _ in parts}
-    # append maps only the delta
+    # an append leaves the map stale; the next colocated scan maps only
+    # the new files
     write_encoded(
         source_code_df(spark, 150, n_repos=5).withColumn(
             "commit", F.concat(F.lit("y"), "commit")
         ),
         ds, mode="append", group_cols=["lang"],
     )
-    parts2 = _committed_part_files(ds)
+    parts2 = rels()
     assert len(parts2) > len(parts)
-    assert file_map_matches(ds, [r for r, _, _ in parts2])
+    assert not file_map_matches(ds, parts2)
+    check_scan()
+    assert built == [len(parts), len(parts2) - len(parts)]
+    assert file_map_matches(ds, parts2)
+    assert mapped_files() == set(parts2)
+    check_scan()  # a current map is not rebuilt
+    assert len(built) == 2
+    # an overwrite removes the map; an explicit build covers every file
+    write_encoded(
+        source_code_df(spark, 200, n_repos=4), ds,
+        mode="overwrite", group_cols=["lang"],
+    )
+    assert not os.path.exists(os.path.join(ds, FILE_MAP_DIR))
+    assert read_decoded(spark, ds).count() == 200
+    assert ensure_file_map(spark, ds) == len(rels()) > 0
+    assert file_map_matches(ds, rels())
 
 
 def test_colocated_scan_matches_default_and_prunes_files(spark, tmp_path):
@@ -240,9 +286,10 @@ def test_colocated_scan_matches_default_and_prunes_files(spark, tmp_path):
     ).count() == 0
 
 
-def test_colocated_scan_falls_back_safely(spark, tmp_path):
-    """Stale/missing sidecar marker or an over-cap surviving-file set
-    must fall back to the default plan, never return wrong rows."""
+def test_colocated_scan_falls_back_safely(spark, tmp_path, monkeypatch):
+    """A stale/missing sidecar marker is refreshed; a refresh that
+    fails or an over-cap surviving-file set must fall back to the
+    default plan, never return wrong rows."""
     from colcrush.engine import scan
     from colcrush.engine.dataset import FILE_MAP_DIR, _FILE_MAP_MARKER
 
@@ -261,11 +308,37 @@ def test_colocated_scan_falls_back_safely(spark, tmp_path):
     assert "Exchange hashpartitioning(chunk_id" in (
         capped._jdf.queryExecution().executedPlan().toString()
     )
-    # stale marker: fallback, still correct
+    # stale marker: the scan refreshes the map, still correct
     os.remove(os.path.join(ds, FILE_MAP_DIR, _FILE_MAP_MARKER))
     assert _rows(
         scan(spark, ds, columns=["path"], filters=filters, colocated=True)
     ) == want
+    # a refresh that cannot write the map falls back to the default plan
+    import colcrush.engine.dataset as ds_mod
+
+    def unwritable(*a, **k):
+        raise OSError("read-only store")
+
+    os.remove(os.path.join(ds, FILE_MAP_DIR, _FILE_MAP_MARKER))
+    with monkeypatch.context() as m:
+        m.setattr(ds_mod, "ensure_file_map", unwritable)
+        fell_back = scan(
+            spark, ds, columns=["path"], filters=filters, colocated=True
+        )
+        assert _rows(fell_back) == want
+        assert "Exchange hashpartitioning(chunk_id" in (
+            fell_back._jdf.queryExecution().executedPlan().toString()
+        )
+    # the same through a real failed Spark write: a file blocks the
+    # sidecar directory
+    shutil.rmtree(os.path.join(ds, FILE_MAP_DIR))
+    with open(os.path.join(ds, FILE_MAP_DIR), "w") as f:
+        f.write("not a directory")
+    fell_back = scan(spark, ds, columns=["path"], filters=filters, colocated=True)
+    assert _rows(fell_back) == want
+    assert "Exchange hashpartitioning(chunk_id" in (
+        fell_back._jdf.queryExecution().executedPlan().toString()
+    )
 
 
 def test_read_chunks_colocated_standalone(spark, tmp_path):
@@ -279,25 +352,3 @@ def test_read_chunks_colocated_standalone(spark, tmp_path):
     chunks = read_chunks_colocated(spark, ds)
     got = decode_table(chunks, read_schema(ds), assume_colocated=True)
     assert _rows(got) == _rows(read_decoded(spark, ds))
-
-
-def test_write_encoded_file_map_optout(spark, tmp_path):
-    """file_map=False (the streaming-epoch setting) must skip the
-    sidecar build entirely — per-epoch maps have no reader — while the
-    dataset itself stays fully readable and a later explicit
-    ensure_file_map builds the map on demand."""
-    import os
-
-    from colcrush.engine import ensure_file_map
-    from colcrush.engine.dataset import FILE_MAP_DIR, _committed_part_files, file_map_matches
-
-    ds = str(tmp_path / "ds")
-    write_encoded(
-        source_code_df(spark, 200, n_repos=4), ds,
-        mode="overwrite", group_cols=["lang"], file_map=False,
-    )
-    assert not os.path.exists(os.path.join(ds, FILE_MAP_DIR))
-    assert read_decoded(spark, ds).count() == 200
-    # on-demand build still works and covers the full part-file set
-    assert ensure_file_map(spark, ds) > 0
-    assert file_map_matches(ds, [r for r, _, _ in _committed_part_files(ds)])

@@ -55,6 +55,29 @@ def test_write_rejects_unknown_mode(spark, src, tmp):
         write_encoded(src, tmp, mode="create", group_cols=["repo", "lang"])
 
 
+def test_grouped_write_runs_four_spark_jobs(spark, tmp):
+    """A grouped write_encoded runs exactly four SQL executions: the
+    salt-plan total, the plan sidecar, the chunks and the manifest. It
+    neither builds the chunk->file sidecar nor sums the plan total a
+    second time."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution_id():
+        # execution-end events reach the store through the async
+        # listener bus; drain it so no execution is missed
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        ids = [-1]
+        while it.hasNext():
+            ids.append(it.next().executionId())
+        return max(ids)
+
+    df = source_code_df(spark, 300, n_repos=4)
+    before = last_execution_id()
+    write_encoded(df, tmp, group_cols=["repo", "lang"])
+    assert last_execution_id() - before == 4
+
+
 def test_failed_encode_releases_salt_plan(spark, src, tmp):
     """If encode_table raises after the salt-plan histogram was
     persisted (unknown bloom column here), write_encoded must unpersist
