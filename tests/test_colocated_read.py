@@ -183,9 +183,7 @@ def test_file_map_sidecar_lifecycle(spark, tmp_path, monkeypatch):
     is its only builder. The first colocated scan after a write maps
     every unmapped part file, ensure_file_map is then a no-op, an
     append leaves the map stale until the next colocated scan maps
-    only the new files, and rows always equal the default plan. The
-    dataset reads without a map, and an on-demand build covers every
-    part file."""
+    only the new files, and rows always equal the default plan."""
     import colcrush.engine.dataset as ds_mod
     from colcrush.engine import ensure_file_map, scan
     from colcrush.engine.dataset import (
@@ -248,15 +246,37 @@ def test_file_map_sidecar_lifecycle(spark, tmp_path, monkeypatch):
     assert mapped_files() == set(parts2)
     check_scan()  # a current map is not rebuilt
     assert len(built) == 2
-    # an overwrite removes the map; an explicit build covers every file
+
+
+def test_write_encoded_file_map_optout(spark, tmp_path):
+    """Writes (batch and streaming epochs alike) skip the sidecar build
+    entirely, and an overwrite removes an existing map, while the
+    dataset itself stays fully readable and a later explicit
+    ensure_file_map builds the map on demand."""
+    from colcrush.engine import ensure_file_map
+    from colcrush.engine.dataset import FILE_MAP_DIR, _committed_part_files, file_map_matches
+
+    ds = str(tmp_path / "ds")
     write_encoded(
         source_code_df(spark, 200, n_repos=4), ds,
         mode="overwrite", group_cols=["lang"],
     )
     assert not os.path.exists(os.path.join(ds, FILE_MAP_DIR))
     assert read_decoded(spark, ds).count() == 200
-    assert ensure_file_map(spark, ds) == len(rels()) > 0
-    assert file_map_matches(ds, rels())
+    # on-demand build still works and covers the full part-file set
+    assert ensure_file_map(spark, ds) > 0
+    assert file_map_matches(ds, [r for r, _, _ in _committed_part_files(ds)])
+    # an overwrite removes the map; the next explicit build covers
+    # every file of the new layout
+    write_encoded(
+        source_code_df(spark, 150, n_repos=3), ds,
+        mode="overwrite", group_cols=["lang"],
+    )
+    assert not os.path.exists(os.path.join(ds, FILE_MAP_DIR))
+    assert read_decoded(spark, ds).count() == 150
+    rels = [r for r, _, _ in _committed_part_files(ds)]
+    assert ensure_file_map(spark, ds) == len(rels) > 0
+    assert file_map_matches(ds, rels)
 
 
 def test_colocated_scan_matches_default_and_prunes_files(spark, tmp_path):
