@@ -19,3 +19,7 @@ Layers:
 """
 
 __version__ = "0.1.0"
+
+from colcrush import _pyworker
+
+_pyworker.install()

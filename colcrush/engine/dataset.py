@@ -400,13 +400,16 @@ def _colocated_file_df(
 ) -> "DataFrame | None":
     """One row per committed chunk part file, greedy size-binned into
     min(n_files, defaultParallelism) bins. 1x parallelism, not an
-    oversubscribed multiple: a python-stage TASK costs ~0.2 CPU-s of
-    worker/arrow-stream setup (measured interleaved: 32 bins cost
-    +4.8 CPU-s over 8 bins for identical work at bench scale), which is
-    also why AQE's parallelismFirst coalesces the default read path to
-    ~defaultParallelism tasks — matching it keeps the colocated plan
-    at CPU parity. Greedy largest-first size-binning bounds bin skew by
-    the largest single file (a file is never split). None when the
+    oversubscribed multiple: a python-stage TASK has a fixed setup
+    cost, which is also why AQE's parallelismFirst coalesces the
+    default read path to ~defaultParallelism tasks — matching it keeps
+    the colocated plan at CPU parity. The 1x was measured when that
+    cost was ~0.2 CPU-s (interleaved: 32 bins cost +4.8 CPU-s over 8
+    bins for identical work at bench scale), most of it pyspark.zip's
+    directory re-read per task; colcrush._pyworker cuts the Python
+    side to ~0.025 CPU-s, and the bin count is not re-tuned since.
+    Greedy largest-first size-binning bounds bin skew by the largest
+    single file (a file is never split). None when the
     dataset has no part files. The file list is driver-side, same as
     Spark's own file-source listing. ``files`` overrides the listing
     with an explicit (full_path, size) subset — the file-pruned scan

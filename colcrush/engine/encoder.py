@@ -68,10 +68,13 @@ _STAT_TRUNC = 64
 # mapInArrow per-task overhead, small enough for scheduler rebalancing)
 TARGET_PARTITION_BYTES = 32 << 20
 
-# low-end clamp for the same sizing: a python mapInArrow task costs
-# ~0.2 CPU-s of fixed setup (SCALE.md full-vs-noop decomposition), so
-# the old "floor at the core count" spawned pure overhead on small
-# inputs — 32 tasks of 1.5 MB measured ~2x the CPU of 6 tasks of 8 MB
+# low-end clamp for the same sizing: a python mapInArrow task cost
+# ~0.2 CPU-s of fixed setup when this was tuned (SCALE.md full-vs-noop
+# decomposition), most of it re-reading pyspark.zip's directory per
+# task; colcrush._pyworker now cuts the Python side to ~0.025 CPU-s,
+# and the clamp has not been re-tuned since. The old "floor at the
+# core count" spawned pure overhead on small inputs — 32 tasks of
+# 1.5 MB measured ~2x the CPU of 6 tasks of 8 MB
 # on the 48 MB lineitem roundtrip, with byte-identical output (chunk
 # cuts are partition-count-independent by design). Parallelism is now
 # min(cores, bytes / MIN_TASK_BYTES): large inputs still get one task
@@ -89,10 +92,11 @@ def _salted_partitions(total_bytes: int, cores: int) -> int:
         # region can land at MIN_TASK_BYTES/2, and that parallelism
         # WINS there — floor was tried and measured worse (the 10 MB
         # decimal-roundtrip encode: 1 task 3.7 s vs 2 tasks 2.9 s
-        # median interleaved; the ~0.25 CPU-s task setup is cheaper
-        # than serializing several CPU-s of arrow crossing). The harm
-        # the clamp exists to stop is the far regime — 32 tasks of
-        # 1.5 MB — which ceil prevents just as well.
+        # median interleaved; the task setup, ~0.25 CPU-s then and
+        # less since colcrush._pyworker, is cheaper than serializing
+        # several CPU-s of arrow crossing). The harm the clamp exists
+        # to stop is the far regime — 32 tasks of 1.5 MB — which ceil
+        # prevents just as well.
         min(cores, -(-total_bytes // MIN_TASK_BYTES)),
         -(-total_bytes // TARGET_PARTITION_BYTES),
     )
